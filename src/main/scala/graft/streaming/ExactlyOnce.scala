@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Writers
@@ -35,17 +37,31 @@ import graft.sources.Writers
   * existence with [[storeNonEmpty]] (hidden/underscore-only content — a
   * crashed first write's staging or a bare `_SUCCESS` — is NOT a store;
   * parquet schema inference would fail on it).
+  *
+  * Session rule: foreachBatch bodies run in the CALLER's session, never in
+  * the stream's clone. `writeStream.start()` runs each query in a cloned
+  * session with a new session UUID; the executor gives every new UUID a
+  * fresh classloader and the codegen cache is keyed by (classloader, code),
+  * so a body left in the clone recompiles all of its generated code on
+  * every drain (~10 Janino compiles per log-metrics cycle, 0 re-bound).
+  * [[drain]] hands `body` the micro-batch re-bound to the session that
+  * built the stream (`Bridge.inSession`). Protocol 1 ([[appendFileSink]]:
+  * the band, vector, posting and binary-signature indexes) has no
+  * foreachBatch, so its queries still run in the clone and still recompile
+  * per query.
   */
 object ExactlyOnce {
 
   /** The one foreachBatch drain wiring every reader variant shares —
-    * checkpointed AvailableNow trigger, drained to completion. A fix here
-    * fixes every drain path at once. */
+    * checkpointed AvailableNow trigger, drained to completion, each batch
+    * handed to `body` in the caller's session (the session rule above). A
+    * fix here fixes every drain path at once. */
   private def drain(stream: DataFrame, checkpoint: String)
                    (body: (Dataset[Row], Long) => Unit): Unit = {
+    val caller = stream.sparkSession
     val q = stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        body(batch, batchId)
+        body(Bridge.inSession(batch, caller), batchId)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -104,11 +120,16 @@ object ExactlyOnce {
   /** Protocol 2: land `rows` under the `batch_id=<batchId>` partition of
     * `storePath` via dynamic overwrite — a replayed batch replaces exactly
     * its own partition. Caller computes `rows` against the OTHER batches'
-    * partitions only (exclude `batch_id === batchId` from any self-join). */
+    * partitions only (exclude `batch_id === batchId` from any self-join).
+    * The id is written as a STRING literal: codegen inlines a Long literal
+    * into the generated source (a new class per batch id) but passes a
+    * string by reference, so every batch reuses the same compiled code. The
+    * `batch_id=<n>` directory is the same either way, and partition
+    * inference reads it back as an int. */
   def landBatchPartition(rows: DataFrame, storePath: String,
                          batchId: Long): Unit =
     Writers.overwritePartitions(
-      rows.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)),
+      rows.withColumn("batch_id", lit(batchId.toString)),
       storePath, Seq("batch_id"))
 
   /** Protocol 3: redo journal for a multi-partition store rewrite.

@@ -2,15 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.sources.Writers
 
 /** Stream-static enrichment with an idempotent micro-batch sink — the
   * streaming shape of the reference's enrichment joins (cache-table join in
   * `operators/Enrichment.scala` is the batch twin): a file stream of facts
   * joins a broadcast dimension table, and each micro-batch lands via
-  * foreachBatch + dynamic partition overwrite keyed on the batch id.
+  * foreachBatch + dynamic partition overwrite keyed on the batch id
+  * ([[ExactlyOnce]] protocol 2).
   *
   * Exactly-once story: Structured Streaming replays a failed batch with the
   * SAME batch id after checkpoint recovery, so overwriting the batch's own
@@ -30,19 +28,11 @@ object StreamEnrich {
     *                  production. */
   def run(spark: SparkSession, inPath: String, schemaSource: DataFrame,
           dim: DataFrame, joinCol: String, outPath: String,
-          checkpoint: String, batchHook: Long => Unit = _ => ()): Unit = {
-    val stream = spark.readStream.schema(schemaSource.schema).parquet(inPath)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val enriched = batch.join(broadcast(dim), Seq(joinCol), "left")
-          .withColumn("batch_id", lit(batchId))
-        Writers.overwritePartitions(enriched, outPath, Seq("batch_id"))
+          checkpoint: String, batchHook: Long => Unit = _ => ()): Unit =
+    ExactlyOnce.drainAvailableNow(spark, inPath, schemaSource, checkpoint) {
+      (batch, batchId) =>
+        ExactlyOnce.landBatchPartition(
+          batch.join(broadcast(dim), Seq(joinCol), "left"), outPath, batchId)
         batchHook(batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.pipelines.LogMetrics
 
@@ -29,6 +30,15 @@ import graft.pipelines.LogMetrics
   */
 object StreamingLogMetrics {
 
+  /** The store [[ingest]] lands: the per-batch hit counts (`parse`'s string
+    * columns and the `count` as BIGINT) under the `batch_id=` partition,
+    * which reads back as an int. Declared so [[mergedDaily]] skips the
+    * schema-inference job a plain `spark.read.parquet` runs on every merge;
+    * StreamingLogMetricsSpec pins it against the inferred schema. */
+  val StoreSchema: StructType = StructType.fromDDL(
+    "date STRING, entity_type STRING, slug STRING, segment STRING, " +
+      "cnt BIGINT, batch_id INT")
+
   /** Drain available raw-line text files once; land per-batch hit counts. */
   def ingest(spark: SparkSession, inGlob: String, storePath: String,
              checkpoint: String,
@@ -47,7 +57,7 @@ object StreamingLogMetrics {
     * one aggregation over the (hit-dimension-sized) store. */
   def mergedDaily(spark: SparkSession, storePath: String,
                   segments: Seq[String]): DataFrame = {
-    val store = spark.read.parquet(storePath)
+    val store = spark.read.schema(StoreSchema).parquet(storePath)
     val aggs = segments.map(s =>
       sum(when(col("segment") === s, col("cnt")).otherwise(0L))
         .as(s"nb_visit_$s")) :+

@@ -251,6 +251,23 @@ object Bridge {
       case _ => None
     }
 
+  /** `df`'s plan re-bound to `session`: every job the returned frame submits
+    * is planned by `session` and carries its artifact state, so its tasks
+    * use that session's executor classloader and hit the codegen cache
+    * entries compiled under it (the `graft.streaming.ExactlyOnce` session
+    * rule: a foreachBatch micro-batch is re-bound to the caller's session).
+    *
+    * A micro-batch's `LogicalRDD` leaf keeps the stream session in its
+    * second parameter list: the leaf reads it only to copy itself and for
+    * the default size estimate (`conf.defaultSizeInBytes`, which the clone
+    * copies from the caller), so rebuilding the leaf would change nothing. */
+  def inSession(df: org.apache.spark.sql.DataFrame,
+                session: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+        .queryExecution.logical)
+
   /** Block until the Spark listener bus has delivered every queued event —
     * measurement tools (ShuffleProbe) read listener-accumulated metrics
     * after an action returns, but events are dispatched asynchronously: a

@@ -72,4 +72,19 @@ class BpeSpec extends SparkSpec {
     val b = Bpe.merges(vocab, "w", "f", 4).collect().toSeq
     assert(a === b && a.length === 4)
   }
+
+  test("sampleVocab rejects null and duplicated doc ids") {
+    val ok = Seq((1L, "ab ab"), (2L, "abc"), (3L, "ab ab")).toDF("id", "text")
+    assert(Bpe.sampleVocab(ok, "text", "id").toMap === Map("ab ab" -> 2L, "abc" -> 1L))
+    // a null id is picked (Spark ranks null md5 first) but joins nothing
+    val nullId = Seq((Some(1L), "ab"), (None, "abc")).toDF("id", "text")
+    intercept[IllegalArgumentException](Bpe.sampleVocab(nullId, "text", "id"))
+    // the empty-text twin of a picked id is fetched by the id semi-join
+    val dupId = Seq((1L, "ab"), (1L, ""), (2L, "abc")).toDF("id", "text")
+    intercept[IllegalArgumentException](Bpe.sampleVocab(dupId, "text", "id"))
+    // a twin the row-level top-`cap` left out is fetched too (id 1 has the
+    // smallest md5 of 1..2, so cap = 1 picks one of its two rows)
+    val straddle = Seq((1L, "ab"), (1L, "abc"), (2L, "ba")).toDF("id", "text")
+    intercept[IllegalArgumentException](Bpe.sampleVocab(straddle, "text", "id", cap = 1))
+  }
 }

@@ -47,6 +47,11 @@ class StreamingLogMetricsSpec extends SparkSpec {
 
     runOnce()
     assertEq(b1)
+    // mergedDaily reads with the declared schema: it must be the one the
+    // store infers (nullability aside — parquet reads are all nullable)
+    def fields(s: org.apache.spark.sql.types.StructType) = s.map(f => (f.name, f.dataType))
+    assert(fields(spark.read.parquet(s"$root/store").schema) ===
+      fields(StreamingLogMetrics.StoreSchema))
 
     // idle re-run: no new input, merged view unchanged
     runOnce()
