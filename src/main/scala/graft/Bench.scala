@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.LongAdder
 
-/** Benchmark main: runs every catalog query against SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}}.
+import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
+
+/** Benchmark main: runs every catalog query against SPARK_GRAFT_SF_DIR.
   *
   * Each query is materialized with a noop-format write: every operator
   * executes end-to-end (unlike count(), which lets Catalyst prune the
@@ -15,14 +20,151 @@ import org.apache.spark.sql.SparkSession
   * single-shot artifact lets host drift masquerade as a regression. The
   * median also absorbs the one query-specific codegen-JIT cold run that a
   * single pass lands on whichever query comes first.
+  *
+  * Per timed run a SparkListener also counts jobs, stages, tasks and the
+  * stages' shuffle bytes written and read ([[Layers]]). They print on the
+  * query's `[bench]` stderr line, one value per run, and a full run records
+  * their per-query medians in BENCH_FULL.json's "layers" map.
+  *
+  * Output: the LAST stdout line is the compact [[headline]] JSON (≤ 2000
+  * chars, whatever the catalog size); the per-query map goes to
+  * BENCH_FULL.json only.
+  *
+  * Settable inputs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the
+  * host's cores), SPARK_GRAFT_ONLY (comma-separated query names),
+  * SPARK_GRAFT_WARM=1 and SPARK_GRAFT_RUNS.
+  *
+  * Scaling exponents: build a k× directory with [[ScaleGen]], run the same
+  * restricted, warm selection over both directories and take
+  * log(t_k / t_1) / log(k) per query.
   */
 object Bench {
+  /** Execution counters of one timed run, summed over its jobs and
+    * completed stages. */
+  final case class Layers(jobs: Long, stages: Long, tasks: Long,
+                          shuffleWriteBytes: Long, shuffleReadBytes: Long) {
+    def values: Seq[Long] = Seq(jobs, stages, tasks, shuffleWriteBytes, shuffleReadBytes)
+  }
+  object Layers {
+    /** Record keys of [[Layers.values]], in order. */
+    val names: Seq[String] =
+      Seq("jobs", "stages", "tasks", "shuffle_write_bytes", "shuffle_read_bytes")
+    /** Each counter's name with its values over `runs`, in run order. */
+    def perCounter(runs: Seq[Layers]): Seq[(String, Seq[Long])] =
+      names.zip(runs.map(_.values).transpose)
+  }
+
+  /** Sums [[Layers]] since the last `reset`. Events arrive asynchronously:
+    * callers drain the listener bus before `reset` and before `snapshot`,
+    * or a late stage-completed event is lost from the finishing run or
+    * counted into the next one. */
+  private final class LayerListener extends SparkListener {
+    private val jobs, stages, tasks, shuffleWrite, shuffleRead = new LongAdder
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val m = e.stageInfo.taskMetrics
+      stages.increment()
+      tasks.add(e.stageInfo.numTasks)
+      shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
+      shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
+    }
+    def reset(): Unit =
+      Seq(jobs, stages, tasks, shuffleWrite, shuffleRead).foreach(_.reset())
+    def snapshot: Layers = Layers(jobs.sum, stages.sum, tasks.sum,
+      shuffleWrite.sum, shuffleRead.sum)
+  }
+
+  /** True median: the middle value for odd counts, the mean of the two
+    * middles for even ones (SPARK_GRAFT_RUNS is user-settable — a
+    * lower-middle-only pick would record a low-biased "median" at runs=4
+    * while the artifact claims a median). */
+  def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of no values")
+    val s = xs.sorted
+    val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
+
+  /** The catalog queries a run covers, sorted: all of `catalog` when
+    * `only` (SPARK_GRAFT_ONLY) lists no name, else the listed ones. A
+    * listed name that is not in the catalog fails the run — a typo must
+    * not silently shrink the subset whose total gets printed. */
+  def select(only: Option[String], catalog: Iterable[String]): Seq[String] = {
+    val wanted = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- catalog
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    catalog.toSeq.filter(n => wanted.isEmpty || wanted(n)).sorted
+  }
+
+  // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
+  // comma decimal separator would corrupt the JSON.
+  private def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def str(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** The record's scalar fields. A run over less than the whole catalog
+    * reports "subset_total", so its line can never be read as the catalog
+    * total. `results` holds per-query medians, -1 for a failed query. */
+  private def summary(results: Seq[(String, Double)], floor: Double, runs: Int,
+                      cpus: Int, restricted: Boolean): Seq[(String, String)] = Seq(
+    "metric" -> str(if (restricted) "subset_total" else "total"),
+    "value" -> num(results.collect { case (_, v) if v >= 0 => v }.sum),
+    "unit" -> str("sec"),
+    "floor" -> num(floor),
+    "runs" -> runs.toString,
+    "cpus" -> cpus.toString)
+
+  /** The last stdout line: scalar fields plus the 10 slowest queries — a
+    * bounded size for any catalog, so a 2000-char tail capture keeps it
+    * whole. */
+  def headline(results: Seq[(String, Double)], floor: Double, runs: Int,
+               cpus: Int, restricted: Boolean, sfDir: String): String = {
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
+    obj(summary(results, floor, runs, cpus, restricted) ++ Seq(
+      "n_queries" -> results.size.toString,
+      "n_failed" -> results.count(_._2 < 0).toString,
+      "slowest10" -> obj(slowest.map { case (k, v) => k -> num(v) }),
+      "sf" -> str(sfDir)))
+  }
+
+  /** BENCH_FULL.json: the per-query medians ("queries") and, for queries
+    * that did not fail, the per-counter medians of their runs' [[Layers]]
+    * ("layers"). */
+  def fullRecord(results: Seq[(String, Double)], layers: Seq[(String, Seq[Layers])],
+                 floor: Double, runs: Int, cpus: Int, sfDir: String): String = {
+    def count(v: Double): String = if (v.isWhole) v.toLong.toString else num(v)
+    val layerMap = layers.map { case (q, perRun) =>
+      q -> obj(Layers.perCounter(perRun).map { case (k, vs) =>
+        k -> count(median(vs.map(_.toDouble)))
+      })
+    }
+    obj(summary(results, floor, runs, cpus, restricted = false) ++ Seq(
+      "queries" -> obj(results.map { case (k, v) => k -> num(v) }),
+      "layers" -> obj(layerMap),
+      "sf" -> str(sfDir)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    // Local iteration aid: SPARK_GRAFT_ONLY=j2_large_join_agg,j6_join_preagg
+    // restricts the run (spread checks, drift isolation); a catalog run
+    // leaves it unset. Checked before the session is built, so a typo
+    // costs no start-up.
+    val queries = SparkEntry.queries
+    val selected = select(sys.env.get("SPARK_GRAFT_ONLY"), queries.keys)
+    val restricted = selected.size < queries.size
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // ~100 sequential queries in one driver: ContextCleaner only reclaims
@@ -69,25 +211,17 @@ object Bench {
       .selectExpr("count(distinct substring(text, 1, 8))").collect()
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .selectExpr("sum(aggregate(embedding, 0d, (a, x) -> a + x))").collect()
-    // Local iteration aid: SPARK_GRAFT_ONLY=j2_large_join_agg,j6_join_preagg
-    // restricts the run (spread checks, drift isolation). Driver leaves it
-    // unset and benches the whole catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
     // SPARK_GRAFT_WARM=1: run each selected query once UNTIMED first.
     // Restricted runs (SPARK_GRAFT_ONLY) measure steady state this way —
     // without it, the first execution absorbs that query's own codegen
     // JIT, which the full catalog amortizes across neighbors (r6: d7
     // isolated swung 2.2-14.7 s cold vs tight warm).
     if (sys.env.get("SPARK_GRAFT_WARM").contains("1"))
-      selected.foreach { case (name, fn) =>
+      selected.foreach { name =>
         // NonFatal only: a query that dies in warmup will die timed too —
         // log it as the early signal — and fatal errors (OOM) must escape.
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(e) =>
+        try queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] warmup failed for $name: ${e.getMessage}")
         }
         System.gc()
@@ -99,7 +233,7 @@ object Bench {
     // adjudication normalize totals across runs instead of chasing
     // phantom regressions (this host has measured 126-180s catalog
     // totals on identical code).
-    val floorTimes = (1 to 15).map { _ =>
+    val floor = median((1 to 15).map { _ =>
       val t0 = System.nanoTime()
       spark.read.parquet(s"$sfDir/region.parquet")
         .selectExpr("r_regionkey", "upper(r_name) AS n")
@@ -111,82 +245,63 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       System.gc()
       dt
-    }.sorted
-    val floor = floorTimes(floorTimes.size / 2)
+    })
     System.err.println(f"[bench] floor (median of 15)          $floor%8.2f s")
     val runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption)
       .getOrElse(3).max(1)
+    val listener = new LayerListener
+    spark.sparkContext.addSparkListener(listener)
     val setups = SparkEntry.setups
-    val results = selected
-      .map { case (name, fn) =>
+    val measured = selected.map { name =>
+      val fn = queries(name)
       // Untimed setup: materialize any persisted artifact the query's
       // premise assumes (e.g. d13's baseline label table) outside the
       // timed window — the catalog number measures the advertised work.
       setups.get(name).foreach { prep =>
         try { prep(spark, sfDir); System.gc() }
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] setup failed for $name: ${e.getMessage}")
         }
       }
       // N timed executions, median recorded (see the noise protocol in the
       // scaladoc). A failure on any run marks the query failed — a query
-      // that dies once is broken, not noisy.
+      // that dies once is broken, not noisy. NonFatal only: an OOM or an
+      // interrupt must stop the bench, not be recorded as one failed query.
       var failed = false
-      val times = (1 to runs).iterator.takeWhile(_ => !failed).map { _ =>
+      val timed = (1 to runs).iterator.takeWhile(_ => !failed).map { _ =>
+        Bridge.drainListenerBus(spark)
+        listener.reset()
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failed = true
         }
         val secs = (System.nanoTime() - t0) / 1e9
+        Bridge.drainListenerBus(spark)
+        val layers = listener.snapshot
         // Untimed inter-run/inter-query GC: lets the ContextCleaner reclaim
         // the finished run's shuffles/broadcasts without a pause landing in
         // the next timed window.
         System.gc()
-        secs
+        (secs, layers)
       }.toVector
-      // true median: lower-middle for odd run counts, mean of the two
-      // middles for even ones (SPARK_GRAFT_RUNS is user-settable — a
-      // lower-middle-only pick would record a low-biased "median" at
-      // runs=4 while the artifact claims a median)
-      val secs =
-        if (failed) -1.0
-        else {
-          val s = times.sorted
-          val n = s.size
-          if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-        }
+      val times = timed.map(_._1)
+      val perRun = timed.map(_._2)
+      val secs = if (failed) -1.0 else median(times)
       System.err.println(f"[bench] $name%-28s $secs%8.2f s" +
-        (if (failed) "" else
-          times.map(t => f"$t%.2f").mkString("  [", " ", "]")))
-      name -> secs
+        (if (failed) "" else times.map(t => f"$t%.2f").mkString("  [", " ", "]")) +
+        Layers.perCounter(perRun).map { case (k, vs) => s"$k=${vs.mkString("/")}" }
+          .mkString("  ", " ", ""))
+      (name, secs, perRun)
     }
-    // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
-    // comma decimal separator would corrupt the JSON.
-    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // 2-decimal twin for the stdout line: the driver parses a bounded
-    // stdout TAIL, so the line that must survive whole is kept as short as
-    // the data allows (VERDICT r15 #2 — the durable 3-decimal copy lives in
-    // BENCH_FULL.json, written below).
-    def num2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    val qs2 = results.map { case (k, v) => "\"" + k + "\":" + num2(v) }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val full =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","floor":${num(floor)},"runs":$runs,"queries":$qs,"sf":"$sfDir"}"""
-    // The driver records only a bounded stdout TAIL and parses the complete
-    // one-line JSON (it needs the `queries` map) from it. r15 printed the
-    // full line FIRST and a queries-less headline last — the driver parsed
-    // none of three runs (PERF_r15 empty). So: the compact headline prints
-    // first, the COMPLETE one-line JSON (2-decimal medians, no spaces)
-    // prints LAST where a tail capture keeps it whole; the 3-decimal
-    // artifact goes to a committed repo file.
+    val results = measured.map { case (name, secs, _) => name -> secs }
     // Restricted runs (SPARK_GRAFT_ONLY) are adjudication probes, never the
     // catalog record — only a full run may overwrite the committed artifact.
-    if (only.isEmpty) {
+    if (!restricted) {
+      val full = fullRecord(results,
+        measured.collect { case (name, secs, perRun) if secs >= 0 => name -> perRun },
+        floor, runs, cpus, sfDir)
       // BENCH_FULL.json is the latest-run pointer; a round-stamped copy
       // (BENCH_FULL_r{N}.json, N = 1 + highest committed driver record)
       // survives the next round's overwrite so per-query regression
@@ -208,14 +323,9 @@ object Bench {
           System.err.println(s"[bench] could not write $t: ${e.getMessage}")
         }
     }
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","floor":${num(floor)},"runs":$runs,"n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"slowest20":$slowest,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
-    // only a FULL run may put the catalog-shaped record on the guaranteed-
-    // last line — a restricted probe's subset total must never be
-    // tail-parsable as the round's result
-    if (only.isEmpty)
-      println(s"""{"metric":"total","value":${num2(total)},"unit":"sec","floor":${num2(floor)},"runs":$runs,"queries":$qs2,"sf":"$sfDir"}""")
     spark.stop()
+    // Printed after spark.stop() so no shutdown output can follow it: the
+    // record is read as the LAST line of a bounded stdout tail.
+    println(headline(results, floor, runs, cpus, restricted, sfDir))
   }
 }

@@ -40,9 +40,10 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 10
+    val cpus = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

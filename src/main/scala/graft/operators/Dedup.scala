@@ -209,19 +209,6 @@ object Dedup {
                        blockCols: Seq[String] = Nil): DataFrame =
     bandRowsOf(sigBands(df, toksCol, k, bands, w), idCol, blockCols)
 
-  /** [[minhashBandIndex]] over LONG token sets (w = 1) — the band space is
-    * identical to indexing the stringified values (the
-    * [[graft.functions.MinhashBandsLong]] parity contract), so long-keyed
-    * and string-keyed index rows interoperate. */
-  def minhashBandIndexLong(df: DataFrame, idCol: String, toksCol: String,
-                           k: Int = 16, bands: Int = 8,
-                           blockCols: Seq[String] = Nil): DataFrame =
-    bandRowsOf(
-      df.withColumn("__sb",
-          graft.functions.MinhashBands.minhashBandsLong(col(toksCol), k, bands))
-        .filter(col("__sb").isNotNull),
-      idCol, blockCols)
-
   /** INCREMENTAL near-dup pairs — the daily-ingest shape at corpus scale:
     * a new batch pairs against the already-indexed corpus (via the
     * persisted [[minhashBandIndex]]) and within itself, and nothing else.

@@ -269,9 +269,9 @@ object Bridge {
         .queryExecution.logical)
 
   /** Block until the Spark listener bus has delivered every queued event —
-    * measurement tools (ShuffleProbe) read listener-accumulated metrics
-    * after an action returns, but events are dispatched asynchronously: a
-    * late stage-completed event would be lost from the finishing run or
+    * graft.Bench reads its listener-accumulated per-run counters after an
+    * action returns, but events are dispatched asynchronously: a late
+    * stage-completed event would be lost from the finishing run or
     * miscounted into the next one. Test-utility API, safe on a live bus. */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
